@@ -1,0 +1,1 @@
+"""sparksketch benchmark: see run.py and README.md."""
