@@ -170,20 +170,15 @@ class SketchCheckpoint:
 
     def run(self, df: DataFrame, keys: Sequence[str], factory, update,
             from_bytes, finalize, out_value_schema: str,
-            fail_partitions: frozenset = frozenset(),
-            completed: frozenset | None = None) -> DataFrame:
+            fail_partitions: frozenset = frozenset()) -> DataFrame:
         """Full job: stage-1 partials -> checkpoint parquet -> merge.
+        Partitions ``completed_partitions()`` finds are skipped.
 
         ``fail_partitions`` simulates executor loss for tests: those
-        partitions' partials are withheld from the checkpoint write.
-        ``completed``: a caller-supplied survivor set from an immediately
-        preceding ``completed_partitions()`` call on the same checkpoint —
-        skips re-running that discovery job; None (the default, the
-        production path) discovers it here."""
+        partitions' partials are withheld from the checkpoint write."""
         from .operators.sketch_agg import merge_partials
 
-        done = (completed if completed is not None
-                else self.completed_partitions())
+        done = self.completed_partitions()
         partials = build_partials_with_lineage(
             df, keys, factory, update, self.query_id, skip_partitions=done
         )

@@ -7,10 +7,11 @@ anywhere before the swap leaves only invisible temporaries.  The protocols
 built on this seam:
 
 - WARC sink task commit   (sources/warc.py: dot-temp -> part-<pid>)
-- sketch-table batch/manifest commits (sketch_table.py: *.tmp -> _BATCH_META.json / MANIFEST.json)
-- IVF index quantizer/batch/tombstone/manifest commits (ivf_index.py:
-  QUANT.json / _BATCH_META.json / MANIFEST.json; retraction runs the
-  protocol in REVERSE — one atomic unlink of the commit marker)
+- the unit log under SketchTable and IvfIndex (unit_log.py: *.tmp ->
+  _BATCH_META.json per batch/tombstone unit, MANIFEST.json per compact
+  generation; retraction runs the protocol in REVERSE — one atomic
+  unlink of the commit marker), plus the IVF quantizer's QUANT.json
+  (ivf_index.py)
 - pipeline staging marker (pipeline.py: _STAGE_META.json)
 
 ``publish_file`` is the ONLY function that performs the swap.  The local

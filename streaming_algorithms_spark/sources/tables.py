@@ -39,9 +39,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR,
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABLES,
                 format: str = "parquet") -> dict:
     return {n: load_table(spark, n, sf_dir, format) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABLES,
-                   format: str = "parquet") -> None:
-    for n in names:
-        load_table(spark, n, sf_dir, format).createOrReplaceTempView(n)

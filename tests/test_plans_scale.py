@@ -733,3 +733,31 @@ def test_bucketed_join_skewed_hot_host(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS t_pages_skew")
         spark.sql("DROP TABLE IF EXISTS t_hosts_skew")
+
+
+def test_bg_context_exit_waits_and_body_error_propagates():
+    """The one overlap helper: leaving its ``with`` block waits for the
+    worker even when the body raises, and the BODY's exception is the one
+    that propagates; ``join()`` re-raises the worker's own error."""
+    import threading
+
+    from streaming_algorithms_spark.plans.queries import _Bg
+
+    release = threading.Event()
+    done = []
+
+    def slow():
+        release.wait(5)
+        done.append(1)
+        raise OSError("worker failed too")
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with _Bg(slow) as bg:
+            threading.Timer(0.2, release.set).start()
+            raise RuntimeError("body failed")
+    assert done == [1] and not bg._t.is_alive()
+
+    with _Bg(lambda: 1 / 0) as bad, _Bg(lambda: 7) as good:
+        assert good.join() == 7
+        with pytest.raises(ZeroDivisionError):
+            bad.join()
